@@ -13,13 +13,13 @@ from __future__ import annotations
 
 import os
 import sys
-from collections.abc import Callable
+from collections.abc import Callable, Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from xml_processor_spark.registry import get_oracles, get_queries  # noqa: E402
+from xml_processor_spark.registry import get_oracles, get_queries, load_all  # noqa: E402
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -27,11 +27,13 @@ def entry(spark: SparkSession) -> DataFrame:
     return get_queries()["q_agg_group"](spark, "/root/testdata/sf0.001")
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+def queries() -> Mapping[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2."""
     return get_queries()
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB oracle SQL per SQL-expressible key (rows-only keys omitted)."""
-    return get_oracles()
+    """DuckDB oracle SQL per SQL-expressible key (rows-only keys omitted),
+    as a plain dict: every query module is imported and checked."""
+    load_all()
+    return dict(get_oracles())

@@ -360,6 +360,32 @@ def test_dsir_weights_separate_target_language(spark, queries):
             assert m < 0, f"non-target {lang} weight {m:.3f} not negative"
 
 
+def test_dsir_bucket_memo_cap_keeps_the_batch_keys():
+    """A memo that reaches its cap is cleared between batches, never in
+    the middle of one: with cap 4 and batches of 6 and 8 distinct
+    bigrams, every bucket equals the uncapped result (a mid-batch clear
+    mapped the dropped keys to NaN, then to INT64_MIN indices)."""
+    import pandas as pd
+
+    from xml_processor_spark.functions.llm_pipeline import (
+        _DSIR_B,
+        _dsir_buckets,
+    )
+
+    batches = [
+        pd.Series([f"a{i} b{i}" for i in range(6)] * 2),
+        pd.Series([f"c{i} d{i}" for i in range(7)] + ["a0 b0", "c0 d0"]),
+    ]
+    capped, full = {}, {}
+    for batch in batches:
+        got = _dsir_buckets(batch, capped, cap=4)
+        want = _dsir_buckets(batch, full, cap=1 << 30)
+        assert got.tolist() == want.tolist()
+        assert 0 <= got.min() and got.max() < _DSIR_B
+        assert set(batch) <= set(capped)
+    assert len(full) == 13
+
+
 def test_incremental_dedup_consistent_with_full_pair_set(spark, queries):
     """The incremental batch-vs-index pass must be a pure RESTRICTION of
     the full corpus pair set: every emitted (new, partner) pair appears

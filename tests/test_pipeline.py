@@ -233,3 +233,32 @@ def test_assembled_pipeline_is_one_plan_and_errors_route(spark, queries):
     assert set(by_err) == {True, False}
     assert by_err[True].key_sum is None
     assert by_err[False].key_sum is not None and by_err[False].n > 0
+
+
+def test_parquet_sink_reads_back_the_footer_schema(spark, tmp_path):
+    """The sink re-reads with the schema it wrote instead of inferring it;
+    that schema must still be what the parquet footers hold."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    from xml_processor_spark.plans.pipeline import (
+        _ETL_SCHEMA,
+        Pipeline,
+        _write_etl_fixture,
+    )
+
+    path = _write_etl_fixture(spark, SF_SMALL)
+    sink = str(tmp_path / "sink_pq")
+    spec = _etl_spec(path, sink)
+    spec["stages"][1]["properties"]["schema"] = _ETL_SCHEMA
+    spec["stages"][2]["properties"]["select"] = (
+        "okey, status, total, odate, _error as is_error")
+    df = Pipeline(spec).run(spark)
+    files = sorted(p for p in (tmp_path / "sink_pq").iterdir()
+                   if p.suffix == ".parquet")
+    assert files
+    footer = from_arrow_schema(pq.read_schema(files[0]))
+    assert [(f.name, f.dataType) for f in df.schema] == [
+        (f.name, f.dataType) for f in footer]
+    assert df.schema == spark.read.parquet(sink).schema
+    assert df.count() == spark.read.parquet(sink).count() > 0

@@ -109,7 +109,7 @@ def test_json_schema_drift_null_payloads_agree(spark, queries, tmp_path_factory)
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from xml_processor_spark.registry import REGISTRY
+    from xml_processor_spark.registry import get_oracles
 
     d = tmp_path_factory.mktemp("drift_nulls")
     tbl = pa.table(
@@ -135,7 +135,7 @@ def test_json_schema_drift_null_payloads_agree(spark, queries, tmp_path_factory)
     con.execute(
         f"CREATE VIEW events AS SELECT * FROM read_parquet('{d}/events.parquet')"
     )
-    cur = con.execute(REGISTRY["q_json_schema_drift"].oracle)
+    cur = con.execute(get_oracles()["q_json_schema_drift"])
     ocols = [c[0] for c in cur.description]
     order = sorted(range(len(ocols)), key=lambda i: ocols[i])
     want = {tuple(row[i] for i in order) for row in cur.fetchall()}

@@ -24,7 +24,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb  # noqa: E402
 
 from xml_processor_spark.io import TABLES  # noqa: E402
-from xml_processor_spark.registry import REGISTRY, get_oracles, get_queries  # noqa: E402
+from xml_processor_spark.registry import get_oracles, get_queries  # noqa: E402
 from xml_processor_spark.session import build_session  # noqa: E402
 
 
@@ -424,7 +424,7 @@ def main() -> int:
                         "rows_only": statuses.count("rows_only"),
                         "fail": statuses.count("fail"),
                         "keys_run": len(merged),
-                        "registry": len(REGISTRY),
+                        "registry": len(queries),
                     },
                     "keys": {k: merged[k] for k in sorted(merged)},
                 },
@@ -545,7 +545,7 @@ def main() -> int:
 
     print(f"\n== {n_pass} pass, {n_tol} tolerance-pass, "
           f"{n_rows_only} rows-only, {n_fail} fail "
-          f"(of {len(keys)}; registry={len(REGISTRY)})")
+          f"(of {len(keys)}; registry={len(queries)})")
     if failures:
         print("failing:", " ".join(failures))
     if args.json:

@@ -14,45 +14,6 @@ where built-ins can't express the semantics; no driver-side loops over data.
 
 from __future__ import annotations
 
-from xml_processor_spark.registry import REGISTRY, get_oracles, get_queries
+from xml_processor_spark.registry import REGISTRY, get_oracles, get_queries, load_all
 
 __all__ = ["REGISTRY", "get_queries", "get_oracles", "load_all"]
-
-
-def load_all() -> None:
-    """Import every query module so registration side-effects run."""
-    # Imported lazily so a syntax error in one module is easy to localize.
-    from xml_processor_spark.sources import scans  # noqa: F401
-    from xml_processor_spark.sources import xml_envelope  # noqa: F401
-    from xml_processor_spark.sources import multimodal  # noqa: F401
-    from xml_processor_spark.operators import projection  # noqa: F401
-    from xml_processor_spark.operators import joins  # noqa: F401
-    from xml_processor_spark.operators import aggregation  # noqa: F401
-    from xml_processor_spark.operators import windows  # noqa: F401
-    from xml_processor_spark.operators import sort_limit  # noqa: F401
-    from xml_processor_spark.operators import setops  # noqa: F401
-    from xml_processor_spark.operators import analytics  # noqa: F401
-    from xml_processor_spark.operators import composite  # noqa: F401
-    from xml_processor_spark.operators import cdc  # noqa: F401
-    from xml_processor_spark.operators import commerce  # noqa: F401
-    from xml_processor_spark.operators import timeseries  # noqa: F401
-    from xml_processor_spark.operators import lakeops  # noqa: F401
-    from xml_processor_spark.operators import hypothesis  # noqa: F401
-    from xml_processor_spark.operators import robust  # noqa: F401
-    from xml_processor_spark.operators import audits  # noqa: F401
-    from xml_processor_spark.operators import anova  # noqa: F401
-    from xml_processor_spark.operators import survival  # noqa: F401
-    from xml_processor_spark.functions import sketches  # noqa: F401
-    from xml_processor_spark.functions import scalars  # noqa: F401
-    from xml_processor_spark.functions import udfs  # noqa: F401
-    from xml_processor_spark.functions import llm_text  # noqa: F401
-    from xml_processor_spark.functions import llm_dedup  # noqa: F401
-    from xml_processor_spark.functions import llm_vectors  # noqa: F401
-    from xml_processor_spark.functions import llm_pipeline  # noqa: F401
-    from xml_processor_spark.functions import llm_corpus  # noqa: F401
-    from xml_processor_spark.streaming import event_windows  # noqa: F401
-    from xml_processor_spark.streaming import stateful  # noqa: F401
-    from xml_processor_spark.sources import file_tracking  # noqa: F401
-    from xml_processor_spark.sources import roundtrip  # noqa: F401
-    from xml_processor_spark.sources import pysource  # noqa: F401
-    from xml_processor_spark.plans import pipeline  # noqa: F401

@@ -1047,8 +1047,8 @@ def q_dedup_ngram_jaccard(spark, sf_dir):
         sh = sh.localCheckpoint(eager=True, storageLevel=_SH_CKPT_LEVEL)
         sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
         ranked = _rarity_ranked(sh).localCheckpoint(
-        eager=True, storageLevel=_SH_CKPT_LEVEL
-    )
+            eager=True, storageLevel=_SH_CKPT_LEVEL
+        )
         # k=2 prefix lemma, symmetric: J ≥ 4/5 ⟹ i ≥ ⌈0.8·max(na, nb)⌉
         # and (for max ≥ 2, i.e. any pair that is not singleton-singleton)
         # the two (n − ⌈0.8n⌉ + 2 = ⌊n/5⌋+2)-prefixes share TWO elements
@@ -2074,8 +2074,8 @@ def q_dedup_containment(spark, sf_dir):
         sh = sh.localCheckpoint(eager=True, storageLevel=_SH_CKPT_LEVEL)
         sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
         ranked = _rarity_ranked(sh).localCheckpoint(
-        eager=True, storageLevel=_SH_CKPT_LEVEL
-    )
+            eager=True, storageLevel=_SH_CKPT_LEVEL
+        )
         # k=2 prefix lemma, directional: i ≥ ⌈0.9·na⌉ ≥ 2 ⟹ B contains
         # TWO of A's first ⌊na/10⌋+2 rarity-ordered shingles
         # (r ≤ ⌊na/10⌋+2 ⇔ 10·r ≤ na+20) — so block A's prefix-PAIRS

@@ -903,6 +903,34 @@ def q_dedup_url_canon(spark, sf_dir):
 
 _DSIR_B = 128          # hashed bigram feature buckets
 _DSIR_TARGET = "en"    # the target distribution: English documents
+_DSIR_MEMO_CAP = 1 << 20  # bigram→bucket memo entries (~100 MB worst case)
+
+
+def _dsir_buckets(bigrams, memo: dict, cap: int = _DSIR_MEMO_CAP):
+    """Bucket id per bigram instance: md5 once per DISTINCT bigram (the
+    bounded ``memo``), dict-mapped in C over the instances.
+
+    The memo is cleared only between batches, once it holds ``cap``
+    entries, and every distinct bigram of the batch is inserted after the
+    clear: a clear in the middle of a batch would drop keys the batch
+    still maps, turning them into NaN and then INT64_MIN indices."""
+    import hashlib
+
+    import numpy as np
+
+    if len(memo) >= cap:
+        memo.clear()
+    for bg in bigrams.unique():
+        if bg not in memo:
+            memo[bg] = (
+                int(hashlib.md5(bg.encode("utf-8")).hexdigest()[:15], 16)
+                % _DSIR_B
+            )
+    out = bigrams.map(memo)
+    if out.isna().any():
+        raise RuntimeError("DSIR bucket memo lost a key of the current batch")
+    return out.to_numpy(dtype=np.int64)
+
 
 _DSIR_BIGRAM_SQL = f"""
         big AS (
@@ -993,7 +1021,6 @@ _DSIR_BIGRAM_SQL = f"""
         "whole cost at bench scale.",
 )
 def q_text_dsir(spark, sf_dir):
-    import hashlib
     import math
 
     d = widen(table(spark, sf_dir, "documents")).select(
@@ -1002,10 +1029,11 @@ def q_text_dsir(spark, sf_dir):
 
     # Bounded per-worker memo (ADVICE r12): an uncapped dict grows
     # O(distinct bigrams) per worker — executor-OOM bait on a
-    # high-cardinality 100 TB corpus. Cleared wholesale at 2^20 entries
-    # (~100 MB worst-case); the md5 value is a pure function of the
-    # bigram, so cache state never affects results. Ships empty in the
-    # task closure; each worker process grows its own copy.
+    # high-cardinality 100 TB corpus. _dsir_buckets clears it wholesale
+    # between batches at _DSIR_MEMO_CAP entries; the md5 value is a pure
+    # function of the bigram, so cache state never affects results.
+    # Ships empty in the task closure; each worker process grows its own
+    # copy.
     _bucket_memo: dict = {}
 
     def _batch_bigrams(pdf):
@@ -1042,22 +1070,6 @@ def q_text_dsir(spark, sf_dir):
         docidx = np.repeat(np.arange(len(tok_lists)), lens)[:-1][keep]
         return pairs[keep].reset_index(drop=True), docidx, lens, scorable
 
-    def _buckets_of(bigrams):
-        """Bucket id per bigram instance: md5 once per DISTINCT bigram
-        (the bounded memo), dict-mapped in C over the instances."""
-        import numpy as np
-
-        memo = _bucket_memo
-        for bg in bigrams.unique():
-            if bg not in memo:
-                if len(memo) >= (1 << 20):
-                    memo.clear()
-                memo[bg] = (
-                    int(hashlib.md5(bg.encode("utf-8")).hexdigest()[:15], 16)
-                    % _DSIR_B
-                )
-        return bigrams.map(memo).to_numpy(dtype=np.int64)
-
     def partials(it):
         import numpy as np
         import pandas as pd
@@ -1069,7 +1081,7 @@ def q_text_dsir(spark, sf_dir):
             if got is None:
                 continue
             bigrams, docidx, lens, scorable = got
-            bk = _buckets_of(bigrams)
+            bk = _dsir_buckets(bigrams, _bucket_memo)
             np.add.at(cr, bk, 1)
             tgt_doc = (
                 pdf["lang"].to_numpy()[scorable] == _DSIR_TARGET
@@ -1123,7 +1135,7 @@ def q_text_dsir(spark, sf_dir):
             got = _batch_bigrams(pdf)
             if got is not None:
                 bigrams, docidx, lens, scorable = got
-                bk = _buckets_of(bigrams)
+                bk = _dsir_buckets(bigrams, _bucket_memo)
                 w_doc = np.bincount(
                     docidx, weights=lr_arr[bk], minlength=len(lens)
                 )

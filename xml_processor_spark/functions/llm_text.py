@@ -10,6 +10,7 @@ rounded idf.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from xml_processor_spark.functions.deterministic import py_half_away, r6
@@ -249,9 +250,11 @@ def q_text_langid(spark, sf_dir):
     # score = |doc_bigrams ∩ profile(plang)| is exactly the join-count,
     # the Python fold keeps the FIRST maximum over plang-ascending
     # candidates (= ORDER BY score DESC, plang tie-break), and zero-score
-    # languages never won under join semantics, hence score >= 1.
+    # languages never won under join semantics, hence score >= 1. The
+    # table is corpus-sized, so it is kept on disk, like the shingle
+    # tables of llm_dedup (_SH_CKPT_LEVEL).
     docs = d.select("doc_id", "lang", bigrams.alias("bg")).localCheckpoint(
-        eager=True
+        eager=True, storageLevel=StorageLevel.DISK_ONLY
     )
     bgx = docs.select("lang", F.explode("bg").alias("b"))
     prof_counts = bgx.groupBy(F.col("lang").alias("plang"), "b").agg(

@@ -2235,6 +2235,8 @@ def q_emb_hard_negatives(spark, sf_dir):
 # ANN index health: oracle-checked recall@k curve of IVF vs brute force.
 # ---------------------------------------------------------------------------
 
+# Both keys are registered above in this module, so the (lazily filled)
+# REGISTRY already holds them here.
 from xml_processor_spark.registry import REGISTRY as _REG  # noqa: E402
 
 _ANN_IVF_SQL = _REG["E-KNN-IVF"].oracle

@@ -303,7 +303,8 @@ class _Filter:
 class _ParquetSink:
     """BatchSink: parquet write + read-back (the E-SINK-PQ discipline —
     returning the re-read makes the sink's durability part of the checked
-    result, not a side effect)."""
+    result, not a side effect). The read-back is given the schema just
+    written, which spares a footer schema-inference job per run."""
 
     @staticmethod
     def out_schema(in_schema, props):
@@ -316,7 +317,7 @@ class _ParquetSink:
     @staticmethod
     def apply(spark, df, props):
         df.write.mode("overwrite").parquet(props["path"])
-        return spark.read.parquet(props["path"])
+        return spark.read.schema(df.schema).parquet(props["path"])
 
 
 _PLUGINS = {
