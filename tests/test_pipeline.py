@@ -262,3 +262,45 @@ def test_parquet_sink_reads_back_the_footer_schema(spark, tmp_path):
         (f.name, f.dataType) for f in footer]
     assert df.schema == spark.read.parquet(sink).schema
     assert df.count() == spark.read.parquet(sink).count() > 0
+
+
+def test_pipeline_key_leaves_no_scratch_after_session_stop(tmp_path):
+    """q_pipeline_xml_etl writes its XML fixture and parquet sink under the
+    driver's SparkFiles root, which Spark deletes at session stop: a fresh
+    session pointed at an empty temp dir leaves that dir empty."""
+    import json
+    import os
+    import subprocess
+    import sys
+    import textwrap
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    tmp, local = str(tmp_path / "tmp"), str(tmp_path / "tmp" / "local")
+    os.makedirs(local)
+    prog = textwrap.dedent(f"""
+        import json, os
+        from pyspark import SparkFiles
+        from xml_processor_spark.registry import get_queries
+        from xml_processor_spark.session import build_session
+
+        spark = build_session("leak", shuffle_partitions=8)
+        pdf = get_queries()["q_pipeline_xml_etl"](spark, {SF_SMALL!r}).toPandas()
+        scratch = SparkFiles.getRootDirectory()
+        written = os.listdir(scratch)
+        spark.stop()
+        print(json.dumps({{"rows": len(pdf), "scratch": scratch,
+                           "written": written,
+                           "kept": os.path.exists(scratch)}}))
+    """)
+    env = dict(os.environ, PYTHONPATH=root, TMPDIR=tmp, SPARK_LOCAL_DIRS=local,
+               PYSPARK_SUBMIT_ARGS=f"--driver-java-options "
+                                   f"-Djava.io.tmpdir={tmp} pyspark-shell")
+    res = subprocess.run([sys.executable, "-c", prog], cwd=root, env=env,
+                         capture_output=True, text=True, timeout=300)
+    assert res.returncode == 0, res.stderr[-2000:]
+    got = json.loads(res.stdout.strip().splitlines()[-1])
+    assert got["rows"] > 0 and got["written"] == ["xps_pipeline"]
+    assert got["scratch"].startswith(local) and not got["kept"]
+    left = [os.path.join(d, n) for d, dirs, files in os.walk(tmp)
+            for n in dirs + files]
+    assert left == [local] and not os.listdir(local), left

@@ -89,7 +89,7 @@ def main() -> None:
     spark = build_session("scaling_probe")
     spark.sparkContext.setLogLevel("ERROR")
 
-    # Session pre-warm at the SMALLEST point (floor_probe r15 lesson: the
+    # Session pre-warm at the SMALLEST point (an r15 lesson: the
     # first key in a fresh JVM pays codegen + C2 compile; at sf0.1 that
     # inflates a ~1 s measurement by up to 2x and poisons the exponent's
     # low anchor far more than the multi-second high anchors).

@@ -38,9 +38,9 @@ from __future__ import annotations
 
 import os
 import re
-import tempfile
 from dataclasses import dataclass
 
+from pyspark import SparkFiles
 from pyspark.sql import DataFrame, functions as F
 
 from xml_processor_spark.io import table
@@ -363,9 +363,10 @@ def _write_etl_fixture(spark, sf_dir: str) -> str:
         .groupBy("bucket")
         .agg(F.concat_ws("", F.sort_array(F.collect_list("x"))).alias("value"))
     )
-    out = os.path.join(
-        tempfile.gettempdir(), f"xps_pipeline_{os.getpid()}", "xml_in"
-    )
+    # The driver's SparkFiles root is private to this SparkContext and is
+    # deleted when the session stops, so the fixture and the sink beside it
+    # (q_pipeline_xml_etl) leave nothing behind.
+    out = os.path.join(SparkFiles.getRootDirectory(), "xps_pipeline", "xml_in")
     docs.select("value").write.mode("overwrite").text(out)
     return out
 

@@ -161,7 +161,7 @@ def q_xml_nested_explode(spark, sf_dir):
     # widen() before the groupBy: the partial collect_list (and the per-line
     # XML string build) otherwise runs on the single scan task of the
     # one-row-group local fixture. Measured 1.56s -> 1.34s fresh-process at
-    # sf0.1 (tools/exp_nested.py); no-op on an already-wide scan.
+    # sf0.1; no-op on an already-wide scan.
     li = widen(table(spark, sf_dir, "lineitem"))
     line_xml = F.concat(
         F.lit("<line><ln>"), F.col("l_linenumber").cast("string"),
