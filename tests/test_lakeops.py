@@ -5,7 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_MID, SF_SMALL
+from tests.conftest import SF_MID, SF_SMALL, run_isolated
 from tests.test_plans import explain
 
 
@@ -138,6 +138,47 @@ def test_dpp_prunes_fact_partitions(spark, queries):
     assert "PartitionFilters" in plan
 
 
+def test_dpp_layout_is_rewritten_by_a_new_session(tmp_path):
+    """q_join_dpp writes its partitioned layout once per session, under the
+    session's scratch root. A fixture rebuilt in place between two sessions
+    (as tools/make_sf1.py does) is read fresh by the second session: its
+    result equals the key's DuckDB oracle on the rebuilt fixture. sf0.01,
+    because at sf0.001 no status reaches the key's 1,000-order dim filter
+    and the result is empty whatever the layout holds."""
+    import os
+    import shutil
+
+    import duckdb
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from xml_processor_spark.registry import get_oracles
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    orders = str(sf / "orders.parquet")
+    shutil.copy(os.path.join(SF_MID, "orders.parquet"), orders)
+    prog = f"""
+import json
+from xml_processor_spark.registry import get_queries
+from xml_processor_spark.session import build_session
+spark = build_session("dpp", shuffle_partitions=8)
+rows = get_queries()["q_join_dpp"](spark, {str(sf)!r}).collect()
+spark.stop()
+print(json.dumps(sorted(list(r) for r in rows)))
+"""
+    first = run_isolated(prog, tmp_path)
+    t = pq.read_table(orders)
+    pq.write_table(t.filter(pc.equal(pc.bit_wise_and(t["o_orderkey"], 1), 0)),
+                   orders)
+    second = run_isolated(prog, tmp_path)
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW orders AS SELECT * FROM read_parquet('{orders}')")
+    want = sorted(list(r) for r in con.execute(get_oracles()["q_join_dpp"]).fetchall())
+    assert len(want) == 3 and second != first
+    assert second == want
+
+
 def test_compact_exec_one_file_per_bin(spark, queries):
     """The compaction executor's physical claim: after the rewrite,
     every target_file directory holds exactly ONE data file (the
@@ -158,11 +199,11 @@ def test_compact_exec_one_file_per_bin(spark, queries):
     ordered = sorted(rows, key=lambda r: r.target_file)
     for a, b in zip(ordered, ordered[1:]):
         assert a.shard_max <= b.shard_min
-    # Physical layout: the executor writes to a deterministic
-    # per-(process, sf_dir) path (ADVICE r9 — no mtime-glob races under
-    # parallel workers, no per-invocation /tmp leak).
-    from xml_processor_spark.operators.lakeops import _compact_out_dir
-    newest = _compact_out_dir(SF_SMALL)
+    # Physical layout: the executor writes to one fixed path in the
+    # session's scratch root (no mtime-glob races, nothing outlives the
+    # session).
+    from xml_processor_spark.io import scratch_dir
+    newest = scratch_dir(spark, "compacted")
     assert os.path.isdir(newest), "no compacted output directory found"
     bin_dirs = glob.glob(os.path.join(newest, "target_file=*"))
     assert len(bin_dirs) == _COMPACT_BINS

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import pytest
 
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, run_isolated
 
 
 def _etl_spec(path="/nonexistent", sink="/tmp/xps_pipe_test_sink"):
@@ -264,43 +264,60 @@ def test_parquet_sink_reads_back_the_footer_schema(spark, tmp_path):
     assert df.count() == spark.read.parquet(sink).count() > 0
 
 
+# Every key that writes files: XMLReader file tracking, the parquet and
+# partitioned sinks, streaming replays and checkpoints, the format
+# roundtrips, the partitioned/bucketed layouts and the reliable-checkpoint
+# connected-components chains.
+SCRATCH_KEYS = (
+    "E-COMPACT-EXEC", "E-DEDUP-TTL", "E-FILE-TRACK", "E-FOREACH-BATCH",
+    "E-MULTIMODAL", "E-PYSOURCE-STREAM", "E-SHARD-WRITE", "E-SINK-PQ",
+    "E-STATEFUL", "E-STREAM-JOIN", "E-STREAM-STATIC", "E-WATERMARK",
+    "E-XML-SRC",
+    "q_join_bucketed", "q_join_dpp", "q_pipeline_xml_etl",
+    "q_src_csv_roundtrip", "q_src_json_roundtrip", "q_src_orc_roundtrip",
+    "q_src_xml_dropmalformed", "q_src_text_lines", "q_src_hive_partitioned",
+    "q_src_xml_encoding",
+    "q_dedup_cc_star", "q_dedup_cluster", "q_corpus_funnel",
+)
+
+
 def test_pipeline_key_leaves_no_scratch_after_session_stop(tmp_path):
-    """q_pipeline_xml_etl writes its XML fixture and parquet sink under the
-    driver's SparkFiles root, which Spark deletes at session stop: a fresh
-    session pointed at an empty temp dir leaves that dir empty."""
-    import json
-    import os
-    import subprocess
-    import sys
+    """Every file-writing key puts its scratch under the session's scratch
+    root (io.scratch_dir), inside the driver's SparkFiles root, which Spark
+    deletes at session stop: after one call of each key, spark.stop() and
+    the JVM's exit, the temp dir and the working directory hold no files."""
     import textwrap
 
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    tmp, local = str(tmp_path / "tmp"), str(tmp_path / "tmp" / "local")
-    os.makedirs(local)
     prog = textwrap.dedent(f"""
         import json, os
-        from pyspark import SparkFiles
+        from xml_processor_spark.io import scratch_dir
         from xml_processor_spark.registry import get_queries
         from xml_processor_spark.session import build_session
 
         spark = build_session("leak", shuffle_partitions=8)
-        pdf = get_queries()["q_pipeline_xml_etl"](spark, {SF_SMALL!r}).toPandas()
-        scratch = SparkFiles.getRootDirectory()
-        written = os.listdir(scratch)
+        qs = get_queries()
+        rows = {{k: len(qs[k](spark, {SF_SMALL!r}).collect())
+                 for k in {SCRATCH_KEYS!r}}}
+        root = scratch_dir(spark)
+        written = sorted(os.listdir(root))
         spark.stop()
-        print(json.dumps({{"rows": len(pdf), "scratch": scratch,
-                           "written": written,
-                           "kept": os.path.exists(scratch)}}))
+        kept = os.path.exists(root)
+        # The JVM's extracted native codec libraries (snappy, lz4) live in
+        # its temp dir until it exits: end the gateway JVM before looking.
+        from pyspark import SparkContext
+        SparkContext._gateway.proc.stdin.close()
+        SparkContext._gateway.proc.wait(120)
+        def files(top):
+            return sorted(os.path.join(d, f) for d, _, fs in os.walk(top)
+                          for f in fs)
+        print(json.dumps({{"rows": rows, "root": root, "written": written,
+                           "kept": kept, "tmp": files(os.environ["TMPDIR"]),
+                           "cwd": files(".")}}))
     """)
-    env = dict(os.environ, PYTHONPATH=root, TMPDIR=tmp, SPARK_LOCAL_DIRS=local,
-               PYSPARK_SUBMIT_ARGS=f"--driver-java-options "
-                                   f"-Djava.io.tmpdir={tmp} pyspark-shell")
-    res = subprocess.run([sys.executable, "-c", prog], cwd=root, env=env,
-                         capture_output=True, text=True, timeout=300)
-    assert res.returncode == 0, res.stderr[-2000:]
-    got = json.loads(res.stdout.strip().splitlines()[-1])
-    assert got["rows"] > 0 and got["written"] == ["xps_pipeline"]
-    assert got["scratch"].startswith(local) and not got["kept"]
-    left = [os.path.join(d, n) for d, dirs, files in os.walk(tmp)
-            for n in dirs + files]
-    assert left == [local] and not os.listdir(local), left
+    got = run_isolated(prog, tmp_path)
+    assert sorted(got["rows"]) == sorted(SCRATCH_KEYS)
+    assert got["rows"]["q_pipeline_xml_etl"] > 0
+    assert got["root"].startswith(str(tmp_path / "tmp" / "local"))
+    assert len(got["written"]) >= len(SCRATCH_KEYS) and not got["kept"]
+    assert got["tmp"] == [] and got["cwd"] == [], (
+        len(got["tmp"]), len(got["cwd"]), got["tmp"][:5], got["cwd"][:5])

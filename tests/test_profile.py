@@ -1,4 +1,4 @@
-"""Smoke test of tools/profile.py, run as a subprocess because its tracer
+"""Smoke test of tools/profile_keys.py, run as a subprocess because its tracer
 wraps the py4j gateway client of the session it starts."""
 
 from __future__ import annotations
@@ -15,13 +15,21 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 def test_profile_writes_one_layered_record_per_key(tmp_path):
     out = tmp_path / "profile.json"
+    # A private temp dir (Python, JVM and Spark local dirs), so the
+    # leftover report sees only this run's files.
+    tmp = tmp_path / "tmp"
+    (tmp / "local").mkdir(parents=True)
+    env = dict(os.environ, TMPDIR=str(tmp), SPARK_LOCAL_DIRS=str(tmp / "local"),
+               PYSPARK_SUBMIT_ARGS=f"--driver-java-options "
+                                   f"-Djava.io.tmpdir={tmp} pyspark-shell")
     res = subprocess.run(
-        [sys.executable, os.path.join(ROOT, "tools", "profile.py"),
+        [sys.executable, os.path.join(ROOT, "tools", "profile_keys.py"),
          "--sf", SF_SMALL, "--out", str(out), "q_agg_group", "q_udf_pandas"],
-        cwd=tmp_path, capture_output=True, text=True, timeout=600)
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600)
     assert res.returncode == 0, res.stderr[-2000:]
     prof = json.loads(out.read_text())
     assert prof["failed"] == [] and prof["sf"] == os.path.basename(SF_SMALL)
+    assert prof["leftovers"] == {}
     recs = {r["key"]: r for r in prof["records"]}
     assert list(recs) == ["q_agg_group", "q_udf_pandas"]
     for r in recs.values():

@@ -141,7 +141,7 @@ def test_batch_stream_unified_tumbling(spark, queries):
     assert got == want
 
 
-def test_file_tracking_archives_processed_files(spark):
+def test_file_tracking_archives_processed_files(spark, tmp_path):
     """XMLReader's actionAfterProcess=archive [P: XMLReaderBatchSource]:
     with cleanSource=archive + sourceArchiveDir, processed source files
     must move into the archive tree. Spark archives lazily — the final
@@ -149,10 +149,9 @@ def test_file_tracking_archives_processed_files(spark):
     after round 2, both round-1 files are archived and gone from src."""
     import glob
     import os
-    import tempfile
     import time
 
-    base = tempfile.mkdtemp(prefix="arch_track_")
+    base = str(tmp_path)
     src, ckpt, out, arch = (os.path.join(base, d) for d in ("src", "ckpt", "out", "arch"))
     os.makedirs(src)
 

@@ -11,12 +11,15 @@ their executor time, CPU, shuffle bytes and peak execution memory, and the
 SQL metrics of the final adaptive plan (scan rows, exchanges, Python nodes).
 
 Usage:
-    python tools/profile.py --sf TESTDATA/sf0.01        # bench.py's 168 HEADLINE keys
-    python tools/profile.py --sf TESTDATA/sf0.001 --out p.json q_agg_group ...
+    python tools/profile_keys.py --sf TESTDATA/sf0.01   # bench.py's 168 HEADLINE keys
+    python tools/profile_keys.py --sf TESTDATA/sf0.001 --out p.json q_agg_group ...
 
-Writes ``{"sf", "cores", "wall_s", "failed", "records": [...]}`` to
-``--out`` (default ``PROFILE_<fixture>.json``) and one line per key to
-stderr. Exits 1 if a key raised.
+Writes ``{"sf", "cores", "wall_s", "failed", "leftovers", "records": [...]}``
+to ``--out`` (default ``PROFILE_<fixture>.json``) and one line per key to
+stderr. ``leftovers`` maps each directory (the system temp dir and the
+working directory) to the top-level entries that appeared in it during the
+run and were still there once the session stopped and its JVM exited, with
+the number of files under each. Exits 1 if a key raised.
 """
 
 from __future__ import annotations
@@ -25,13 +28,11 @@ import argparse
 import json
 import os
 import sys
+import tempfile
 import time
 
-HERE = os.path.dirname(os.path.abspath(__file__))
-ROOT = os.path.dirname(HERE)
-# Run as a script, this file's directory leads sys.path, where its name would
-# shadow the standard library's profile module (cProfile imports it).
-sys.path[:] = [ROOT] + [p for p in sys.path if os.path.abspath(p or ".") != HERE]
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from perfbench.tracing import PACKAGES, Tracer, package_of  # noqa: E402
 
@@ -94,6 +95,21 @@ def profile_key(spark, tracer: Tracer, key: str, fn, sf_dir: str) -> dict:
     return {k: _tidy(k, v) for k, v in rec.items()}
 
 
+def _leftovers(before: dict[str, set[str]]) -> dict[str, dict[str, int]]:
+    """New top-level entries in each directory of ``before`` (dir -> names
+    listed at the start), with the number of files each holds."""
+    out = {}
+    for top, seen in before.items():
+        new = {}
+        for name in sorted(set(os.listdir(top)) - seen):
+            path = os.path.join(top, name)
+            new[name] = (sum(len(fs) for _, _, fs in os.walk(path))
+                         if os.path.isdir(path) else 1)
+        if new:
+            out[top] = new
+    return out
+
+
 def _tidy(field: str, v):
     """Seconds and MB to 6 places, counts (floats in the tracer) to ints."""
     if not isinstance(v, float):
@@ -116,6 +132,11 @@ def main() -> int:
     fixture = os.path.basename(args.sf.rstrip("/"))
     out = args.out or f"PROFILE_{fixture}.json"
 
+    # The Python workers import the package too, from any working directory.
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
+    dirs = {os.path.abspath(d) for d in (tempfile.gettempdir(), ".")}
+    before = {d: set(os.listdir(d)) for d in dirs}
     spark = build_session("profile")
     spark.sparkContext.setLogLevel("ERROR")
     queries = get_queries()
@@ -138,13 +159,25 @@ def main() -> int:
               file=sys.stderr, flush=True)
     wall = time.perf_counter() - t_start
     tracer.close()
+    spark.stop()
+    # The JVM deletes its extracted native codec libraries when it exits;
+    # end it so that only files the keys left behind are counted.
+    from pyspark import SparkContext
+
+    SparkContext._gateway.proc.stdin.close()
+    SparkContext._gateway.proc.wait(120)
+    left = _leftovers(before)
     with open(out, "w") as f:
         json.dump({"sf": fixture, "cores": tracer.cores, "wall_s": round(wall, 3),
-                   "failed": failed, "records": records}, f, indent=1)
+                   "failed": failed, "leftovers": left, "records": records},
+                  f, indent=1)
         f.write("\n")
-    print(f"profile: {len(records)} keys in {wall:.1f} s, {len(failed)} failed "
-          f"-> {out}", file=sys.stderr)
-    spark.stop()
+    n_left = sum(sum(v.values()) for v in left.values())
+    print(f"profile: {len(records)} keys in {wall:.1f} s, {len(failed)} failed, "
+          f"{n_left} files left behind -> {out}", file=sys.stderr)
+    for top, new in left.items():
+        print(f"profile: left in {top}: " + ", ".join(
+            f"{name} ({n} files)" for name, n in new.items()), file=sys.stderr)
     return 1 if failed else 0
 
 

@@ -18,7 +18,7 @@ import pandas as pd
 
 from pyspark.sql import functions as F
 
-from xml_processor_spark.io import row_count, table, widen
+from xml_processor_spark.io import row_count, scratch_dir, table, widen
 from xml_processor_spark.registry import register
 
 
@@ -1671,11 +1671,7 @@ def _min_label_propagate(spark, pairs, max_rounds=_CC_MAX_ROUNDS):
     graphs are shallow; a deeper graph needs the alternating
     large-star/small-star variant (O(log n) rounds adversarially).
     """
-    sc = spark.sparkContext
-    if sc.getCheckpointDir() is None:
-        import tempfile
-
-        sc.setCheckpointDir(tempfile.mkdtemp(prefix="xps-ckpt-"))
+    scratch_dir(spark)  # sets the checkpoint dir under the scratch root
     edges = pairs.union(
         pairs.select(F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b"))
     ).persist()  # reused every round; lineage kept → executor-loss safe
@@ -1730,11 +1726,7 @@ def _star_contract(spark, pairs, max_rounds=_CC_MAX_ROUNDS):
     phase is one groupBy + one re-join — the same per-round shuffle
     class, just fewer rounds. Reliable checkpoints per round (the
     q_dedup_cluster fault story)."""
-    sc = spark.sparkContext
-    if sc.getCheckpointDir() is None:
-        import tempfile
-
-        sc.setCheckpointDir(tempfile.mkdtemp(prefix="xps-ckpt-"))
+    scratch_dir(spark)  # sets the checkpoint dir under the scratch root
     edges = (
         pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
         .filter(F.col("u") != F.col("v"))

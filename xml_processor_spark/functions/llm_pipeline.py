@@ -16,7 +16,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from xml_processor_spark.functions.deterministic import py_half_away, r6
-from xml_processor_spark.io import table, widen
+from xml_processor_spark.io import scratch_dir, table, widen
 from xml_processor_spark.registry import register
 
 _CHUNK = 32  # tokens per chunk
@@ -517,9 +517,7 @@ def q_shard_assign(spark, sf_dir):
         "controlled by coalesce/AQE, never a global sort.",
 )
 def e_shard_write(spark, sf_dir):
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix="shards_")
+    out = scratch_dir(spark, "shards")
     d = table(spark, sf_dir, "documents").withColumn("shard", _shard_col())
     d.write.mode("overwrite").partitionBy("shard").parquet(out)
     back = spark.read.parquet(out)

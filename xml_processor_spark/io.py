@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkFiles
 from pyspark.sql import DataFrame, SparkSession
 
 TABLES = (
@@ -40,6 +41,46 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     df = _load(spark, path, name)
     cache[path] = df
     return df
+
+
+def scratch_dir(spark: SparkSession, name: str | None = None,
+                fresh: bool = False) -> str:
+    """Where a key's scratch files live: the one place that decides it.
+
+    Every file a key writes (sinks, partitioned and bucketed layouts,
+    format roundtrips, streaming sources and checkpoints, RDD checkpoints)
+    goes under one root inside the driver's SparkFiles root directory,
+    which is private to the SparkContext and deleted by Spark when the
+    session stops, so nothing outlives the session. A cluster deployment
+    would point this root at shared storage.
+
+    - ``scratch_dir(spark)`` is the root itself.
+    - ``scratch_dir(spark, name)`` is a fixed path per (session, name),
+      not created here: for overwrite-mode sinks and layouts reused within
+      a session.
+    - ``scratch_dir(spark, name, fresh=True)`` is a new empty directory on
+      every call: for streaming sources and checkpoints, which must not
+      see an earlier call's files.
+
+    The root is looked up once and memoized on the session object (the
+    ``_xps_df_cache`` pattern). On first use it also becomes the home of
+    the SparkContext checkpoint directory, unless one is already set.
+    """
+    root = getattr(spark, "_xps_scratch", None)
+    if root is None:
+        root = os.path.join(SparkFiles.getRootDirectory(), "xps")
+        os.makedirs(root, exist_ok=True)
+        sc = spark.sparkContext
+        if sc.getCheckpointDir() is None:
+            sc.setCheckpointDir(os.path.join(root, "checkpoints"))
+        spark._xps_scratch = root
+    if name is None:
+        return root
+    if fresh:
+        import tempfile
+
+        return tempfile.mkdtemp(prefix=f"{name}_", dir=root)
+    return os.path.join(root, name)
 
 
 def _load(spark: SparkSession, path: str, name: str) -> DataFrame:

@@ -14,13 +14,11 @@ via (ts DESC, event_id DESC) tie-break.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from xml_processor_spark.functions.deterministic import dsum, ts_sec
-from xml_processor_spark.io import table
+from xml_processor_spark.io import scratch_dir, table
 from xml_processor_spark.registry import register
 
 _INNER_SQL = """
@@ -422,8 +420,8 @@ _BUCKETS = 8
         "tests/test_plans.py). At 100 TB this is the difference between "
         "re-shuffling the fact table per query and never shuffling it; "
         "result identical to the plain join — the oracle is the plain "
-        "join. Bucket tables are created once per (session, sf) and "
-        "reused.",
+        "join. Bucket tables are created once per (session, sf) as "
+        "external tables under the session's scratch root, and reused.",
 )
 def q_join_bucketed(spark, sf_dir):
     import hashlib
@@ -433,18 +431,9 @@ def q_join_bucketed(spark, sf_dir):
     def _bucketize(name: str, src, key: str) -> str:
         tbl = f"b_{name}_{tag}"
         if not spark.catalog.tableExists(tbl):
-            # A fresh session starts with an empty in-memory catalog, but a
-            # prior session's managed-table files may survive in the
-            # warehouse dir — clear them or saveAsTable refuses
-            # (LOCATION_ALREADY_EXISTS).
-            import shutil
-            from urllib.parse import urlparse
-
-            wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-            shutil.rmtree(os.path.join(wh, tbl), ignore_errors=True)
             src.write.bucketBy(_BUCKETS, key).sortBy(key).mode(
                 "overwrite"
-            ).saveAsTable(tbl)
+            ).option("path", scratch_dir(spark, tbl)).saveAsTable(tbl)
         return tbl
 
     lt = _bucketize(

@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from xml_processor_spark.functions.deterministic import cents, ts_sec
-from xml_processor_spark.io import table
+from xml_processor_spark.io import scratch_dir, table
 from xml_processor_spark.registry import register
 
 # --- q_join_bloom ----------------------------------------------------------
@@ -314,21 +314,22 @@ def q_resample_ohlc(spark, sf_dir):
         "column would be statically inferred onto the scan "
         "(InferFiltersFromConstraints) and never exercise DPP — probed: "
         "the <> 'P' form produced a static PartitionFilter, no pruning "
-        "subquery. The partitioned layout is written once per (sf, "
-        "operator) scratch dir and reused; tests/test_lakeops.py asserts "
+        "subquery. The partitioned layout is written once per (session, "
+        "sf) scratch dir and reused; tests/test_lakeops.py asserts "
         "the pruning subquery is present. DPP is THE mechanism that makes "
         "dim-filtered fact scans cheap on partitioned 100 TB tables.",
 )
 def q_join_dpp(spark, sf_dir):
-    from xml_processor_spark.sources.roundtrip import artifact_dir
-
-    o = table(spark, sf_dir, "orders")
-    path = artifact_dir(sf_dir, "dpp-orders")
-    # One-time partitioned layout (idempotent per scratch dir; the write
-    # is skipped when the layout already exists so repeated bench runs
-    # time the pruned read, not the write).
+    import hashlib
     import os
 
+    o = table(spark, sf_dir, "orders")
+    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    path = scratch_dir(spark, f"dpp-orders-{tag}")
+    # The partitioned layout is written once per session and sf dir: the
+    # write is skipped when the layout already exists, so repeated bench
+    # runs time the pruned read, not the write. The scratch root dies with
+    # the session, so a new session never reads an earlier one's layout.
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         o.write.partitionBy("o_orderstatus").mode("overwrite").parquet(path)
     fact = spark.read.parquet(path)
@@ -513,27 +514,6 @@ def q_compaction_plan(spark, sf_dir):
     )
 
 
-def _compact_out_dir(sf_dir):
-    """Deterministic per-process output path for the compaction rewrite.
-
-    ADVICE r9: a fresh ``mkdtemp`` per invocation leaked a parquet copy of
-    lineitem every verify/bench iteration, and the test rediscovered the
-    output by mtime-sorted globbing of shared ``/tmp`` — racy under
-    parallel pytest workers. One path per (process, sf_dir) is stable for
-    the test to import, is reused (``overwrite`` mode cleans it) across
-    repeated invocations in a session, and cannot collide across
-    concurrent sessions (pid-keyed).
-    """
-    import hashlib
-    import os
-    import tempfile
-
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    return os.path.join(
-        tempfile.gettempdir(), f"xps_compact_{os.getpid()}_{tag}", "compacted"
-    )
-
-
 @register(
     "E-COMPACT-EXEC",
     oracle=f"""
@@ -588,7 +568,7 @@ def e_compact_exec(spark, sf_dir):
         F.date_format("l_shipdate", "yyyy-MM").alias("shard"),
     )
     plan = q_compaction_plan(spark, sf_dir).select("shard", "target_file")
-    out = _compact_out_dir(sf_dir)
+    out = scratch_dir(spark, "compacted")
     (
         li.join(F.broadcast(plan), "shard")
         .repartition("target_file")

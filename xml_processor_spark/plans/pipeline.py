@@ -40,10 +40,9 @@ import os
 import re
 from dataclasses import dataclass
 
-from pyspark import SparkFiles
 from pyspark.sql import DataFrame, functions as F
 
-from xml_processor_spark.io import table
+from xml_processor_spark.io import scratch_dir, table
 from xml_processor_spark.registry import register
 
 _MACRO = re.compile(r"\$\{([^}]+)\}")
@@ -363,10 +362,7 @@ def _write_etl_fixture(spark, sf_dir: str) -> str:
         .groupBy("bucket")
         .agg(F.concat_ws("", F.sort_array(F.collect_list("x"))).alias("value"))
     )
-    # The driver's SparkFiles root is private to this SparkContext and is
-    # deleted when the session stops, so the fixture and the sink beside it
-    # (q_pipeline_xml_etl) leave nothing behind.
-    out = os.path.join(SparkFiles.getRootDirectory(), "xps_pipeline", "xml_in")
+    out = os.path.join(scratch_dir(spark, "xps_pipeline"), "xml_in")
     docs.select("value").write.mode("overwrite").text(out)
     return out
 

@@ -14,11 +14,10 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import functions as F
 
-from xml_processor_spark.io import table
+from xml_processor_spark.io import scratch_dir, table
 from xml_processor_spark.registry import register
 
 
@@ -64,7 +63,7 @@ def run_tracked_ingest(spark, src_dir: str, checkpoint: str, out_dir: str) -> No
         "re-ingest of A/B would inflate round2_new_rows and mismatch.",
 )
 def e_file_track(spark, sf_dir):
-    base = tempfile.mkdtemp(prefix="filetrack_")
+    base = scratch_dir(spark, "filetrack", fresh=True)
     src = os.path.join(base, "src")
     ckpt = os.path.join(base, "ckpt")
     out = os.path.join(base, "out")

@@ -29,6 +29,7 @@ from pyspark.sql.datasource import (
     SimpleDataSourceStreamReader,
 )
 
+from xml_processor_spark.io import scratch_dir
 from xml_processor_spark.registry import register
 
 _ROWS = 10_000
@@ -193,7 +194,6 @@ class SequenceStreamDataSource(DataSource):
         "per offset range).",
 )
 def e_pysource_stream(spark, sf_dir):
-    import tempfile
     import time
     import uuid
 
@@ -213,9 +213,8 @@ def e_pysource_stream(spark, sf_dir):
         agg.writeStream.outputMode("complete")
         .format("memory")
         .queryName(sink)
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="pysrc_ckpt_")
-        )
+        .option("checkpointLocation",
+                scratch_dir(spark, "pysrc_ckpt", fresh=True))
         .start()
     )
     try:

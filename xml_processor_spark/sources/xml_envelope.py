@@ -22,12 +22,9 @@ two-decimal strings built from integer cents.
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import functions as F
 
-from xml_processor_spark.io import table, widen
+from xml_processor_spark.io import scratch_dir, table, widen
 from xml_processor_spark.registry import register
 
 # Exact 2-dp decimal string from a 2-dp double (cross-engine-identical):
@@ -320,8 +317,7 @@ def q_json_typed(spark, sf_dir):
 )
 def e_xml_src(spark, sf_dir):
     o = table(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 100 < 2)
-    tmp = tempfile.mkdtemp(prefix="xmlsrc_")
-    xml_dir = os.path.join(tmp, "xml")
+    xml_dir = scratch_dir(spark, "xml_src")
     # One well-formed document per bucket (the XML datasource scans for
     # rowTag occurrences inside a rooted document, as the Hadoop
     # XmlInputFormat underlying XMLReader does [P]).
@@ -373,9 +369,9 @@ def e_sink_pq(spark, sf_dir):
     li = table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_quantity", "l_returnflag"
     )
-    tmp = os.path.join(tempfile.mkdtemp(prefix="sinkpq_"), "out")
-    li.write.mode("overwrite").partitionBy("l_returnflag").parquet(tmp)
-    back = spark.read.parquet(tmp)
+    out = scratch_dir(spark, "sink_pq")
+    li.write.mode("overwrite").partitionBy("l_returnflag").parquet(out)
+    back = spark.read.parquet(out)
     return back.groupBy("l_returnflag").agg(F.count(F.lit(1)).alias("cnt"))
 
 

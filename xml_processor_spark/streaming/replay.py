@@ -11,10 +11,11 @@ state at end of replay.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from xml_processor_spark.io import scratch_dir
 
 EVENT_SCHEMA = "event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, value DOUBLE"
 
@@ -31,7 +32,7 @@ def write_replay_files(
     timestamps are early — the late-arrival fixture. ``sentinel`` appends a
     final watermark-flush row 1 day after max ts.
     """
-    src = tempfile.mkdtemp(prefix="replay_")
+    src = scratch_dir(df.sparkSession, "replay", fresh=True)
     df = df.select("event_id", "ts", "user_id", "event_type", "value")
     bounds = df.agg(
         F.min("ts").alias("lo"), F.max("ts").alias("hi")

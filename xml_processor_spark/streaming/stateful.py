@@ -17,6 +17,7 @@ deployment default for large keyspaces (config note in session.py).
 
 from __future__ import annotations
 
+import os
 from collections.abc import Iterator
 
 import pandas as pd
@@ -24,7 +25,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from xml_processor_spark.io import table
+from xml_processor_spark.io import scratch_dir, table
 from xml_processor_spark.registry import register
 from xml_processor_spark.streaming.replay import (
     read_replay_stream,
@@ -283,8 +284,6 @@ def e_stream_join(spark, sf_dir):
 def epoch_keyed_sink(out_dir: str):
     """Idempotent foreachBatch writer: epoch id keys the output path, so a
     replayed epoch overwrites its own prior attempt (no duplicates)."""
-    import os
-
     def sink(bdf, epoch_id: int) -> None:
         bdf.write.mode("overwrite").parquet(
             os.path.join(out_dir, f"epoch={epoch_id}")
@@ -316,12 +315,10 @@ def epoch_keyed_sink(out_dir: str):
         "sink total equals the batch source.",
 )
 def e_foreach_batch(spark, sf_dir):
-    import tempfile
-
     ev = table(spark, sf_dir, "events").filter(F.col("user_id") < 30)
     src = write_replay_files(ev, n_buckets=4)
-    out_dir = tempfile.mkdtemp(prefix="fb_sink_")
-    ckpt = tempfile.mkdtemp(prefix="fb_ckpt_")
+    base = scratch_dir(spark, "foreach_batch", fresh=True)
+    out_dir, ckpt = os.path.join(base, "sink"), os.path.join(base, "ckpt")
     sink = epoch_keyed_sink(out_dir)
 
     q = (
