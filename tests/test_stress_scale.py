@@ -317,51 +317,39 @@ def test_emb_lsh_hi_bounds_hold_at_16x(spark, queries, stress16_dir):
 
 @pytest.mark.slow
 def test_dedup_cluster_converges_in_diameter_rounds_at_10x(spark, queries, stress_dir):
-    """Label propagation is the one operator whose ITERATION COUNT is
-    data-dependent (VERDICT r6 #8). Contract: rounds <= component
-    diameter + 1 (min label travels one hop per round; the +1 is the
-    zero-changed-rows fixpoint confirmation). The 10x corpus's pair
-    graph is 5,000 diameter-1 components (each injected dup pairs with
-    exactly its source doc), so the walk must finish in <= 2 rounds —
-    and every pair must resolve to root = the smaller doc_id."""
-    from pyspark.sql import functions as F
-
+    """Connected components is the one operator whose ITERATION COUNT is
+    data-dependent (VERDICT r6 #8). The 10x corpus's pair graph is 5,000
+    diameter-1 components (each injected dup pairs with exactly its source
+    doc), so star contraction must finish in <= 2 rounds — and every dup
+    must resolve to root = its source, the smaller doc_id."""
     from xml_processor_spark.functions.llm_dedup import (
-        _min_label_propagate,
+        _star_contract,
         q_dedup_ngram_jaccard,
     )
 
     pairs = q_dedup_ngram_jaccard(spark, stress_dir).select("id_a", "id_b")
-    labels, rounds = _min_label_propagate(spark, pairs)
+    labels, rounds = _star_contract(spark, pairs)
     assert rounds <= 2, f"diameter-1 graph took {rounds} rounds"
     got = {(r["id"], r["root"]) for r in labels.collect()}
-    want = set()
-    for i in range(_N_DUP_DOCS):
-        want.add((i, i))
-        want.add((_N_UNIQ_DOCS + i, i))
-    assert got == want
+    assert got == {(_N_UNIQ_DOCS + i, i) for i in range(_N_DUP_DOCS)}
 
 
-def test_min_label_propagation_rounds_track_path_diameter(spark):
-    """Synthetic pin of the rounds-vs-diameter contract on a shape the
-    corpus never produces: a 10-node path (diameter 9) chained to a
-    4-node star (diameter 2). The path must take 9-10 rounds (one hop
-    per round — a propagation rewrite that silently stopped early would
-    mislabel the far end), the star <= 3, and both components must
-    resolve to their min id."""
-    from pyspark.sql import functions as F
-
-    from xml_processor_spark.functions.llm_dedup import _min_label_propagate
+def test_star_contraction_rounds_on_path_and_star(spark):
+    """Synthetic pin of the round bound on a shape the corpus never
+    produces: a 10-node path (diameter 9) next to a 4-node star (diameter
+    2). Both components must resolve to their min id — a loop that
+    stopped early would mislabel the far end of the path — within 10
+    rounds."""
+    from xml_processor_spark.functions.llm_dedup import _star_contract
 
     path = [(i, i + 1) for i in range(100, 109)]          # 100-...-109
     star = [(200, 201), (200, 202), (200, 203)]           # center 200
     pairs = spark.createDataFrame(path + star, ["id_a", "id_b"])
-    labels, rounds = _min_label_propagate(spark, pairs)
+    labels, rounds = _star_contract(spark, pairs)
     assert rounds <= 10, f"path diameter 9 took {rounds} rounds"
-    assert rounds >= 9, f"path cannot converge in {rounds} < 9 rounds"
     got = {(r["id"], r["root"]) for r in labels.collect()}
-    assert got == {(i, 100) for i in range(100, 110)} | {
-        (i, 200) for i in range(200, 204)
+    assert got == {(i, 100) for i in range(101, 110)} | {
+        (i, 200) for i in range(201, 204)
     }
 
 

@@ -1486,8 +1486,9 @@ def _int_band_code_udf(bands: int, band_bits: int):
 
 
 def _int_lsh_pairs(vecs, bands: int, band_bits: int):
-    """Candidate (id_a, id_b) pairs from the integer-exact band family —
-    same banding algebra as :func:`_sign_lsh_pairs`, deterministic codes.
+    """Candidate (id_a, id_b) pairs from the integer-exact sign-LSH band
+    family: an equi join on (band, code) over :func:`_int_band_code_udf`'s
+    deterministic codes.
 
     r16 (guide §4/§2.4): the band-code table is materialized ONCE — the
     self-join's two legs each re-ran the Arrow banding UDF over the full
@@ -1658,91 +1659,55 @@ def e_emb_lsh_hi(spark, sf_dir):
 _CC_MAX_ROUNDS = 20
 
 
-def _min_label_propagate(spark, pairs, max_rounds=_CC_MAX_ROUNDS):
-    """Iterative min-label propagation over an undirected pair graph.
-
-    ``pairs`` is a DataFrame of (id_a, id_b). Returns ``(labels, rounds)``
-    where labels maps every id appearing in pairs to its component root
-    (the component's min id) and ``rounds`` counts propagation rounds
-    actually run. Convergence contract (stress-asserted in
-    tests/test_stress_scale.py): the min label travels one hop per round,
-    so rounds <= component diameter + 1 (the +1 is the zero-changed-rows
-    fixpoint confirmation). Raises past ``max_rounds`` — near-dup cluster
-    graphs are shallow; a deeper graph needs the alternating
-    large-star/small-star variant (O(log n) rounds adversarially).
-    """
-    scratch_dir(spark)  # sets the checkpoint dir under the scratch root
-    edges = pairs.union(
-        pairs.select(F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b"))
-    ).persist()  # reused every round; lineage kept → executor-loss safe
-    labels = (
-        edges.select(F.col("id_a").alias("id"))
-        .distinct()
-        .select("id", F.col("id").alias("root"))
-        .checkpoint()
+def _is_star_forest(edges):
+    """True when the oriented edge set ``(u, v)``, ``u > v``, is a star
+    forest: no node has two out-edges, and no node has both an out-edge and
+    an in-edge. One groupBy over every edge end, then ``isEmpty()``: a node
+    with an out-edge breaks the forest as soon as it has a second end."""
+    ends = edges.select(F.col("u").alias("n"), F.lit(1).alias("out")).union(
+        edges.select(F.col("v").alias("n"), F.lit(0).alias("out"))
     )
-    rounds = 0
-    for _ in range(max_rounds):
-        nbr = (
-            edges.join(labels, edges.id_a == labels.id)
-            .groupBy(F.col("id_b").alias("nid"))
-            .agg(F.min("root").alias("nbr_root"))
-        )
-        upd = (
-            labels.join(nbr, labels.id == nbr.nid, "left")
-            .select(
-                "id",
-                F.col("root").alias("old_root"),
-                F.least(F.col("root"), F.coalesce("nbr_root", "root")).alias("root"),
-            )
-            .checkpoint()  # truncate lineage; durable on a real cluster
-        )
-        # Roots only ever decrease ⇒ zero strictly-decreased rows ⇔ fixpoint.
-        changed = upd.filter(F.col("root") < F.col("old_root")).count()
-        labels = upd.select("id", "root")
-        rounds += 1
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(f"label propagation not converged in {max_rounds}")
-    edges.unpersist()
-    return labels, rounds
+    bad = (
+        ends.groupBy("n")
+        .agg(F.max("out").alias("out"), F.count(F.lit(1)).alias("ends"))
+        .filter((F.col("out") == 1) & (F.col("ends") > 1))
+    )
+    return bad.isEmpty()
 
 
-def _star_contract(spark, pairs, max_rounds=_CC_MAX_ROUNDS):
-    """Alternating large-star/small-star connected components.
+def _star_contract(spark, pairs):
+    """Connected components of an undirected pair graph by alternating
+    large-star/small-star contraction (Kiveris et al., "Connected
+    Components in MapReduce and Beyond", SoCC'14).
 
-    The published MapReduce CC algorithm (Kiveris et al., "Connected
-    Components in MapReduce and Beyond", SoCC'14): each round applies
-    Large-Star (every node points its LARGER neighbors at its minimum
-    neighborhood member) then Small-Star (every node folds its smaller
-    neighbors, and itself, onto that minimum), which contracts any
-    component onto its minimum id in O(log n) rounds REGARDLESS of
-    diameter — the variant :func:`_min_label_propagate`'s docstring
-    defers to for adversarially deep graphs (label propagation pays one
-    round per hop; a 1000-node chain needs 1000 rounds there and ~15
-    here, pinned in tests/test_llm.py). Returns ``(labels, rounds)``
-    with the same (id, root) contract as the propagate variant. Each
-    phase is one groupBy + one re-join — the same per-round shuffle
-    class, just fewer rounds. Reliable checkpoints per round (the
-    q_dedup_cluster fault story)."""
+    ``pairs`` is a DataFrame of (id_a, id_b). Edges are oriented once,
+    larger id → smaller id, without self-loops or repeats. Each round
+    applies Large-Star (every node points its LARGER neighbors at the
+    minimum of its neighborhood) then Small-Star (every node points its
+    smaller neighbors at their minimum and itself at it). Both keep every
+    edge oriented and never isolate a node, and together they contract
+    every component onto its minimum id in O(log n) rounds whatever its
+    diameter (a 1,024-node chain takes about 10, pinned in
+    tests/test_llm.py). A star forest is a fixpoint of the pair, so the
+    loop stops as soon as the edges form one (:func:`_is_star_forest`,
+    one groupBy per round); a graph that already is one runs 0 rounds.
+
+    Returns ``(labels, rounds)``. ``labels`` is the final star forest as
+    (id, root) rows: one row per NON-root node of the graph, root = its
+    component's minimum id. Roots and ids outside the graph have no row,
+    so callers label them with ``coalesce(root, id)``. Raises past
+    ``_CC_MAX_ROUNDS`` rounds. Every round's edges are a RELIABLE
+    checkpoint (the q_dedup_cluster fault story)."""
     scratch_dir(spark)  # sets the checkpoint dir under the scratch root
+    # Checkpointed: the first test and the first round both read the edges,
+    # and each read of the lazy pair list would re-run the whole candidate
+    # pipeline (SCALING.json r15 measured that double build at SF3).
     edges = (
-        pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
+        pairs.select(
+            F.greatest("id_a", "id_b").alias("u"),
+            F.least("id_a", "id_b").alias("v"),
+        )
         .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .checkpoint()
-    )
-    # Members derive from the CHECKPOINTED edges, not from `pairs`: a
-    # second action on the lazily-derived pair list would re-execute the
-    # entire upstream candidate pipeline (SCALING.json r15 measured the
-    # double build as the bulk of cc_star's 1.52 growth exponent at SF3
-    # — the pair join is the super-linear part; reading the checkpoint
-    # back is linear IO). Equivalent set: dedup pairs carry id_a != id_b
-    # by construction, so no member exists only on a self-loop row.
-    members = (
-        edges.select(F.col("u").alias("id"))
-        .union(edges.select(F.col("v").alias("id")))
         .distinct()
         .checkpoint()
     )
@@ -1752,50 +1717,35 @@ def _star_contract(spark, pairs, max_rounds=_CC_MAX_ROUNDS):
         m = sym.groupBy("u").agg(
             F.least(F.min("v"), F.first("u")).alias("m")
         )
+        # v > u >= m, so every emitted edge stays oriented.
         return (
             sym.join(m, "u")
             .filter(F.col("v") > F.col("u"))
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
             .distinct()
         )
 
     def small_star(e):
-        o = e.select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        )
-        m = o.groupBy("u").agg(F.min("v").alias("m"))
+        m = e.groupBy("u").agg(F.min("v").alias("m"))
         folded = (
-            o.join(m, "u")
+            e.join(m, "u")
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
             .union(m.select("u", F.col("m").alias("v")))
         )
         return folded.filter(F.col("u") != F.col("v")).distinct()
 
     rounds = 0
-    for _ in range(max_rounds):
-        nxt = small_star(large_star(edges)).checkpoint()
+    while not _is_star_forest(edges):
+        if rounds == _CC_MAX_ROUNDS:
+            raise RuntimeError(
+                f"star contraction not converged in {_CC_MAX_ROUNDS} rounds"
+            )
+        edges = small_star(large_star(edges)).checkpoint()
         rounds += 1
-        # Set equality: counts match AND no edge is new. subtract() is
-        # distinct-based and both sides are distinct by construction.
-        if nxt.count() == edges.count() and nxt.subtract(edges).isEmpty():
-            edges = nxt
-            break
-        edges = nxt
-    else:
-        raise RuntimeError(f"star contraction not converged in {max_rounds}")
-    # Converged edge set is a star forest (child -> component min).
-    labels = members.join(
-        edges.select(F.col("u").alias("id"), F.col("v").alias("root")),
-        "id",
-        "left",
-    ).select("id", F.coalesce("root", "id").alias("root"))
-    return labels, rounds
+    return edges.select(F.col("u").alias("id"), F.col("v").alias("root")), rounds
 
 
-@register(
-    "q_dedup_cc_star",
-    oracle=f"""
+_CC_ORACLE = f"""
         WITH RECURSIVE pairs AS MATERIALIZED ({_NGRAM_PAIRS_SQL}),
         edges AS MATERIALIZED (
             SELECT id_a AS src, id_b AS dst FROM pairs
@@ -1811,72 +1761,34 @@ def _star_contract(spark, pairs, max_rounds=_CC_MAX_ROUNDS):
         FROM documents d
         LEFT JOIN (SELECT id, min(r) AS root FROM reach GROUP BY id) m
           ON m.id = d.doc_id
-    """,
-    origin="LLM",
-    doc="Connected components via alternating large-star/small-star "
-        "contraction (Kiveris et al., SoCC'14) over the same "
-        "shingle-Jaccard pair graph as q_dedup_cluster — and the SAME "
-        "answer (identical oracle; cross-implementation equality also "
-        "pinned in tests/test_llm.py). The difference is the round "
-        "bound: label propagation pays one round per hop of component "
-        "diameter, star contraction pays O(log n) regardless — this is "
-        "the 100 TB answer when the dup graph contains long chains "
-        "(crawl rings, boilerplate gradients), where the propagate "
-        "variant's round count, not its shuffle volume, becomes the "
-        "bottleneck (its own docstring defers here). Per round: two "
-        "groupBy-min + re-join phases, reliable checkpoints, exact "
-        "set-equality convergence witness (count + subtract-empty — "
-        "no hash truce).",
+    """
+
+_CC_DOC = (
+    "Duplicate-cluster resolution — the step after pair generation in a "
+    "dedup pipeline: connected components over the shingle-Jaccard pair "
+    "graph, every document labeled with its cluster root (= min doc_id in "
+    "the component, the canonical keeper; a document outside the pair "
+    "graph is its own root). One function under two keys, "
+    "q_dedup_cluster and q_dedup_cc_star. Spark side is alternating "
+    "large-star/small-star contraction (Kiveris et al., SoCC'14): O(log n) "
+    "rounds whatever the component diameter, so long dup chains (crawl "
+    "rings, boilerplate gradients) cost a logarithmic number of rounds; "
+    "each round is two groupBy-min + re-join phases. The loop stops when "
+    "the edge set is a star forest (no node with two out-edges, none with "
+    "both an out- and an in-edge): one groupBy + isEmpty per round, "
+    "so an already-contracted graph runs 0 rounds. The driver loop is "
+    "control flow only — per-round data never leaves the cluster. Fault "
+    "story (ADVICE r3): every round's edges are a RELIABLE checkpoint "
+    "(checkpoint dir = durable storage on a cluster) — localCheckpoint "
+    "would make prior rounds unrecomputable on any executor loss."
 )
-def q_dedup_cc_star(spark, sf_dir):
-    pairs = q_dedup_ngram_jaccard(spark, sf_dir).select("id_a", "id_b")
-    labels, _ = _star_contract(spark, pairs)
-    d = table(spark, sf_dir, "documents")
-    return d.join(labels, d.doc_id == labels.id, "left").select(
-        "doc_id", F.coalesce("root", "doc_id").alias("root")
-    )
 
 
-@register(
-    "q_dedup_cluster",
-    oracle=f"""
-        WITH RECURSIVE pairs AS MATERIALIZED ({_NGRAM_PAIRS_SQL}),
-        edges AS MATERIALIZED (
-            SELECT id_a AS src, id_b AS dst FROM pairs
-            UNION ALL
-            SELECT id_b, id_a FROM pairs
-        ),
-        reach(id, r) AS (
-            SELECT DISTINCT src, src FROM edges
-            UNION
-            SELECT e.dst, reach.r FROM reach JOIN edges e ON e.src = reach.id
-        )
-        SELECT d.doc_id, COALESCE(m.root, d.doc_id) AS root
-        FROM documents d
-        LEFT JOIN (SELECT id, min(r) AS root FROM reach GROUP BY id) m
-          ON m.id = d.doc_id
-    """,
-    origin="LLM",
-    doc="Duplicate-cluster resolution — the step after pair generation in "
-        "a dedup pipeline: connected components over the shingle-Jaccard "
-        "pair graph, every document labeled with its cluster root "
-        "(= min doc_id in the component, the canonical keeper). Spark side "
-        "is iterative min-label propagation: each round one equi-join "
-        "shuffle + map-side-combined min; rounds bounded by component "
-        "diameter (near-dup clusters are shallow — converges in 2-3 here; "
-        "an alternating large-star/small-star variant bounds rounds at "
-        "O(log n) for adversarial graphs). The driver loop is control "
-        "flow only — per-round data never leaves the cluster. Fault "
-        "story (ADVICE r3): edges persist WITH lineage (a lost executor "
-        "recomputes its blocks), per-round labels use RELIABLE "
-        "checkpoints (checkpoint dir = durable storage on a cluster) — "
-        "localCheckpoint would make prior rounds unrecomputable on any "
-        "executor loss. Convergence witness is a changed-row count, not "
-        "sum(root), so no ANSI int64-overflow exposure on wide id spaces.",
-)
+@register("q_dedup_cc_star", oracle=_CC_ORACLE, origin="LLM", doc=_CC_DOC)
+@register("q_dedup_cluster", oracle=_CC_ORACLE, origin="LLM", doc=_CC_DOC)
 def q_dedup_cluster(spark, sf_dir):
     pairs = q_dedup_ngram_jaccard(spark, sf_dir).select("id_a", "id_b")
-    labels, _ = _min_label_propagate(spark, pairs)
+    labels, _ = _star_contract(spark, pairs)
     d = table(spark, sf_dir, "documents")
     return d.join(labels, d.doc_id == labels.id, "left").select(
         "doc_id", F.coalesce("root", "doc_id").alias("root")
@@ -2639,7 +2551,7 @@ def _ngram_pairs_pinned(spark, sf_dir):
         "transitivity 3·triangles/wedges. High transitivity means the "
         "near-dup relation is locally consistent (template families "
         "form cliques, safe to collapse); low transitivity flags "
-        "chained false merges before label propagation runs. Scale "
+        "chained false merges before connected components runs. Scale "
         "shape: the canonical distributed triangle count — edges are "
         "already oriented (id_a < id_b), so each triangle {{a<b<c}} is "
         "found EXACTLY once by two equi joins over the (bounded, "

@@ -1374,8 +1374,8 @@ def q_corpus_budget_fill(spark, sf_dir):
         "are monotone and attribute kill volume per stage. Scale shape: "
         "ONE flags projection per document (the md5-keeper flag is a "
         "window over the md5 key, the CC root comes from the shared "
-        "bounded-round propagation labels, quality is scan-side scalar "
-        "math), then a single conditional-count aggregate — the funnel "
+        "star-contraction labels of q_dedup_cluster, quality is "
+        "scan-side scalar math), then a single conditional-count aggregate — the funnel "
         "itself adds no join and no extra fact pass beyond the pair "
         "pipeline the dedup stages already require.",
 )
@@ -1383,7 +1383,7 @@ def q_corpus_funnel(spark, sf_dir):
     from pyspark.sql import Window
 
     from xml_processor_spark.functions.llm_dedup import (
-        _min_label_propagate,
+        _star_contract,
         q_dedup_ngram_jaccard,
     )
     from xml_processor_spark.functions.llm_text import (
@@ -1397,7 +1397,7 @@ def q_corpus_funnel(spark, sf_dir):
 
     d = table(spark, sf_dir, "documents")
     pairs = q_dedup_ngram_jaccard(spark, sf_dir).select("id_a", "id_b")
-    labels, _ = _min_label_propagate(spark, pairs)
+    labels, _ = _star_contract(spark, pairs)
     toks = F.split("text", " ")
     n = F.size(toks)
     mean_wlen = (F.length("text") - n + 1) / n.cast("double")
